@@ -18,31 +18,18 @@ object Tables {
   // query's plan — at 190 bench queries that is pure fixed cost. The
   // memoized frame is an immutable logical plan (relations are re-resolved
   // per derived query, so cross-query reuse cannot alias attributes any
-  // more than the in-query self-joins already do). Keyed by session so
-  // test suites with their own sessions never share. A long-lived JVM
-  // cycling through sessions must not pin every dead session's frames
-  // (each DataFrame strongly references its session, so weak keys alone
-  // cannot collect them): entries whose context is stopped are purged on
-  // the next read — in OSS Spark `SparkSession.stop()` stops the context,
-  // so `isStopped` IS the end-of-session signal — and `evict` gives
-  // callers an explicit per-session hook.
-  private val readerCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]
-  private def purgeStopped(): Unit =
-    readerCache.keysIterator.filter(_._1.sparkContext.isStopped).toList
-      .foreach(readerCache.remove)
+  // more than the in-query self-joins already do). [[SessionMemo]] keys it
+  // by session, so test suites with their own sessions never share, and
+  // purges a stopped session's readers on the next read.
+  private val readers = new SessionMemo[DataFrame]
   /** Drop every memoized reader of `spark` — for explicit lifecycle
     * management; stopped sessions are purged automatically on later reads. */
-  def evict(spark: SparkSession): Unit =
-    readerCache.keysIterator.filter(_._1 eq spark).toList
-      .foreach(readerCache.remove)
+  def evict(spark: SparkSession): Unit = readers.evict(spark)
   private[graft] def cachedReadersFor(spark: SparkSession): Int =
-    readerCache.keysIterator.count(_._1 eq spark)
-  private def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    purgeStopped()
-    readerCache.getOrElseUpdate((spark, sfDir, name),
+    readers.entriesFor(spark)
+  private def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    readers.getOrElseUpdate(spark, s"$sfDir/$name")(
       spark.read.parquet(s"$sfDir/$name.parquet"))
-  }
 
   def region(spark: SparkSession, sf: String): DataFrame   = read(spark, sf, "region")
   def nation(spark: SparkSession, sf: String): DataFrame   = read(spark, sf, "nation")

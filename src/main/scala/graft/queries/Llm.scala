@@ -60,47 +60,17 @@ object Llm {
     * Jaccard (fraction of agreeing minhashes) falls below this skip exact
     * verification. 0.55 (≥ 17/32 agreeing hashes) against a 0.8 output
     * target: exact binomial P(true J = 0.8 estimating < 17/32) ≈ 1.4e-4,
-    * falling to 3.5e-6 at J = 0.85. Swept in r14 (PERF.md,
-    * `tools.NearSweep`, cap × sieve grid at 10× and 100×): output pairs
-    * were IDENTICAL at every grid point (2,560 / 25,598), and at 100× the
-    * 0.55 → 0.65 move buys only ~6% wall (the pipeline is signature-scan
-    * bound there, not verification-bound), so the default keeps the
-    * ~40× tighter boundary-recall guarantee. */
+    * falling to 3.5e-6 at J = 0.85. Swept in r14 (PERF.md, cap × sieve
+    * grid at 10× and 100×): output pairs were IDENTICAL at every grid
+    * point (2,560 / 25,598), and at 100× the 0.55 → 0.65 move buys only
+    * ~6% wall (the pipeline is signature-scan bound there, not
+    * verification-bound), so the default keeps the ~40× tighter
+    * boundary-recall guarantee. */
   private[graft] val SieveFrac = 0.55
   /** Fixed hash family seeds (see [[graft.functions.MinHash]] — 31-bit
     * bounded, deterministic across runs/JVMs/engines). */
   private val (hashA, hashB) =
     (graft.functions.MinHash.hashA, graft.functions.MinHash.hashB)
-
-  /** Character 5-gram shingles per document (NOT deduplicated), pre-hashed
-    * to longs. explode(sequence) + a codegen'd substring instead of
-    * a transform(...) lambda (higher-order lambdas are interpreted —
-    * CodegenFallback — and dominated the near-dup runtime), and hashing at
-    * the source means no downstream shuffle ever carries shingle strings.
-    *
-    * The shingle id is the codegen'd [[graft.functions.RollingHash]]
-    * (base-31 polynomial over code points, mod 1e9+7) rather than
-    * xxhash64: the value is ENGINE-SHARED arithmetic, so the DuckDB
-    * oracle re-derives every shingle id and the whole pipeline replays
-    * (round-17; xxhash64 was the one non-replayable stage). A 5-char
-    * shingle folds to < 127·(31⁴+…+1) ≈ 1.26e8 — the mod never wraps, so
-    * collisions come only from the base-31 carry structure (measured at
-    * sf0.01/sf0.1: distinct 5-gram strings == distinct rollhash ids,
-    * 1,981 and 2,041 — zero colliding pairs), and the minhash family
-    * below is universal over ANY distinct-id set, so dispersion of the
-    * ids themselves is irrelevant to LSH quality.
-    *
-    * All of a document's shingle hashes come from the ONE-PASS
-    * [[graft.functions.ShingleHashes]] kernel (value-identical to
-    * rollhash(substring(text, i+1, 5)) per position, locked in LlmSpec) —
-    * explode(sequence) + per-position substring would re-scan the string
-    * per position and allocate a String per shingle. */
-  private def shingles(docs: DataFrame): DataFrame =
-    // length >= 5 guard kept as a cheap scan-side prune (a shorter doc
-    // yields an empty hash array anyway — the kernel guards n < width)
-    docs.filter(length(col("text")) >= 5)
-      .select(col("doc_id"),
-        explode(graft.functions.TextExpressions.shingleHashes(col("text"), 5)).as("sh"))
 
   /** Near-duplicate pairs: 5-gram shingles -> 32 MinHashes -> 8 bands of 4
     * -> bucket join -> exact-Jaccard verify >= 0.8. FULL-REPLAY ORACLED
@@ -116,10 +86,8 @@ object Llm {
   def qDedupNear(s: SparkSession, sf: String): DataFrame =
     nearDupPairs(Tables.documents(s, sf))
 
-  /** (band_idx, band_hash) rows per doc from a cached signature frame —
-    * shared by the pipeline and the `tools.NearDbg` bucket-distribution
-    * probe. */
-  private[graft] def bandsOfSig(sig: DataFrame, nBands: Int = Bands): DataFrame = {
+  /** (band_idx, band_hash) rows per doc from a cached signature frame. */
+  private def bandsOfSig(sig: DataFrame, nBands: Int): DataFrame = {
     // public-API guard (nearDupPairs threads nBands through here): a band
     // count that doesn't divide NumHashes would silently drop the trailing
     // minhash columns from every band, and nBands > NumHashes would give
@@ -151,18 +119,6 @@ object Llm {
       .select(col("doc_id"), col("bd.band_idx").as("band_idx"), col("bd.band_hash").as("band_hash"))
   }
 
-  /** Signature frame (doc_id, m0..m31) from a raw shingle frame — the
-    * 32-way min-aggregate REFERENCE shape; the pipeline itself rides the
-    * fused per-row kernel ([[sigOf]]), and LlmSpec locks the two
-    * bit-identical. Kept for tools.NearStage's stage-split probe. */
-  private[graft] def sigFromShingles(shRaw: DataFrame): DataFrame = {
-    val hashed = shRaw.withColumn("h", pmod(col("sh"), lit(MersennePrime)))
-    val minhashAggs = (0 until NumHashes).map { i =>
-      min(pmod(col("h") * lit(hashA(i)) + lit(hashB(i)), lit(MersennePrime))).as(s"m$i")
-    }
-    hashed.groupBy("doc_id").agg(minhashAggs.head, minhashAggs.tail: _*)
-  }
-
   /** Signature frame for a (doc_id, text) frame — the production path
     * since round 17: the fused [[graft.functions.MinHashSignature]]
     * kernel turns the signature into per-row MAP work (scan → 32-col
@@ -170,7 +126,16 @@ object Llm {
     * buffer table was the dominant near-dup stage at every decade. No
     * repartition needed: map work parallelizes with the scan, and a doc
     * with no 5-gram (length < 5) has NO signature row, exactly like the
-    * groupBy route. Exposed for tools.NearDbg/MassProbe. */
+    * groupBy route. LlmSpec locks it bit-identical to the 32-way
+    * min-aggregate formulation the oracle replays.
+    *
+    * Shingle ids are the engine-shared [[graft.functions.RollingHash]]
+    * (base-31 polynomial over code points, mod 1e9+7), so the DuckDB
+    * oracle re-derives every id. A 5-char shingle folds to < 1.26e8, so
+    * the mod never wraps; measured at sf0.01/sf0.1, distinct 5-gram
+    * strings == distinct ids. The ONE-PASS [[graft.functions.ShingleHashes]]
+    * kernel emits all of a document's ids (value-identical to
+    * rollhash(substring(text, i+1, 5)) per position, locked in LlmSpec). */
   private[graft] def sigOf(docs: DataFrame): DataFrame = {
     import graft.functions.TextExpressions.{minHashSig, shingleHashes}
     docs.filter(length(col("text")) >= 5)
@@ -180,20 +145,13 @@ object Llm {
         (0 until NumHashes).map(i => col("ms").getItem(i).as(s"m$i")): _*)
   }
 
-  /** Raw repartitioned shingle frame — exposed for tools.NearStage's
-    * stage-split probe so it times the pipeline's exact stage shapes. */
-  private[graft] def sigShingles(docs: DataFrame): DataFrame =
-    shingles(docs.repartition(col("doc_id")))
-
   /** Core near-dup pipeline over any (doc_id, text) frame (tested directly
-    * on hand-built frames in LlmSpec). `bucketCap`/`sieveFrac` default to
-    * the production constants; `tools.NearSweep` threads alternatives
-    * through to measure the recall/wall frontier — every emitted pair is
-    * exact-verified regardless, so the knobs can only affect RECALL
-    * (which pairs are discovered), never precision. */
-  def nearDupPairs(docs: DataFrame,
-      bucketCap: Int = BucketCap, sieveFrac: Double = SieveFrac,
-      nBands: Int = Bands): DataFrame = {
+    * on hand-built frames in LlmSpec). The bucket cap and sieve are the
+    * constants [[BucketCap]] and [[SieveFrac]] (frontier in PERF.md);
+    * `nBands` defaults to the production layout. Every emitted pair is
+    * exact-verified, so the layout can only affect RECALL (which pairs are
+    * discovered), never precision. */
+  def nearDupPairs(docs: DataFrame, nBands: Int = Bands): DataFrame = {
     // Signatures ride the fused per-row kernel (sigOf): scan → shingle
     // array → 32 minhashes in one codegen'd map stage — no exploded
     // shingle stream, no 32-way min hash-aggregate (the r16 shape; the
@@ -224,7 +182,7 @@ object Llm {
     // collect_set-then-filter shape would gather a boilerplate bucket's
     // entire million-doc membership into one aggregation buffer just to
     // drop it (the hot-key funnel in aggregate-buffer costume). After the
-    // anti-join every surviving bucket is ≤ bucketCap by construction, so
+    // anti-join every surviving bucket is ≤ BucketCap by construction, so
     // the collected array is BOUNDED state (the q_market_basket rule),
     // and the a < b pairs come from a codegen'd posexplode + suffix-slice
     // explode over the sorted members instead of a self-join — one fewer
@@ -234,7 +192,7 @@ object Llm {
     // key), so the planner/AQE broadcasts it.
     val bands = bandsOfSig(sig, nBands)
     val hotBuckets = bands.groupBy("band_idx", "band_hash")
-      .agg(count(lit(1)).as("bn")).filter(col("bn") > bucketCap)
+      .agg(count(lit(1)).as("bn")).filter(col("bn") > BucketCap)
       .select("band_idx", "band_hash")
     val candidates = bands.join(hotBuckets, Seq("band_idx", "band_hash"), "left_anti")
       .groupBy("band_idx", "band_hash")
@@ -254,7 +212,7 @@ object Llm {
     // is < 2³¹ (mod a 31-bit Mersenne prime), so (m₂ⱼ | m₂ⱼ₊₁ << 32) is
     // lossless in 16 columns — half the shuffled bytes, identical
     // per-hash agreement arithmetic recovered by shift/mask (all codegen;
-    // 100× sieve stage ~18.5 → ~10 s, tools.NearStage).
+    // 100× sieve stage ~18.5 → ~10 s, PERF.md).
     val packs = NumHashes / 2
     def packed(idCol: String, p: String) =
       sig.select(col("doc_id").as(idCol) +:
@@ -272,7 +230,7 @@ object Llm {
     }.reduce(_ + _)
     val strong = Caches.registered(
       candidates.join(sigA, Seq("a_id")).join(sigB, Seq("b_id"))
-        .filter(estMatches >= (NumHashes * sieveFrac).toInt)
+        .filter(estMatches >= (NumHashes * SieveFrac).toInt)
         .select("a_id", "b_id"))
     // exact verification on the sieved candidates only, as per-doc SET
     // ARRAYS instead of an exploded (doc, shingle) stream: each candidate
@@ -290,7 +248,7 @@ object Llm {
     // array_intersect cardinality ≡ the equi-join's per-pair match count,
     // and the jaccard arithmetic is the same integer-ratio division. The
     // semi-join still lands BEFORE the kernel, so the full corpus never
-    // materializes shingle arrays; the length filter mirrors shingles()'s
+    // materializes shingle arrays; the length filter mirrors sigOf's
     // scan-side prune (a doc without a 5-gram cannot be a candidate —
     // it has no signature row — so the filter is shape, not semantics).
     val candDocs = strong.select(col("a_id").as("doc_id"))

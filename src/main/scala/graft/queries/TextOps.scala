@@ -1334,9 +1334,9 @@ object TextOps {
 
   /** Stop-window purge threshold: an anchored window shared by more docs
     * than this is boilerplate and leaves the posting index before the
-    * self-join. ONE definition, read by the query, its oracle string, and
-    * tools.CapProbe — so tuning the cap can never silently leave the probe
-    * measuring a different cut than the query applies. */
+    * self-join. ONE definition, read by the query and its oracle string,
+    * so the two can never apply different cuts (purged posting mass at
+    * sf0.1 vs 100× in PERF.md). */
   private[graft] val SubstringStopCap = 64
 
   def qDedupSubstring(s: SparkSession, sf: String): DataFrame = {

@@ -190,8 +190,8 @@ object VectorOps {
   /** Probe fan-out — the recall/cost knob every IVF deployment tunes.
     * 16 since round 17 (the r16 nprobe=4 left random-corpus recall@5 at
     * 0.455, the one quality floor a user would notice): the measured
-    * frontier on this near-random 64-dim fixture (`tools.IvfSweep`,
-    * recall@5 vs exact brute force / wall min-of-2) is
+    * frontier on this near-random 64-dim fixture (PERF.md, recall@5 vs
+    * exact brute force / wall min-of-2) is
     * nprobe 4 → 0.455, 8 → 0.620, 12 → 0.695, 16 → 0.755, 24 → 0.860 at
     * sf0.1 (10×: 0.490 / 0.645 / 0.740 / 0.795 / 0.880) with wall FLAT
     * across the grid at these SFs — candidate scoring is linear in
@@ -246,14 +246,7 @@ object VectorOps {
       .select(col(idCol), col("cid"))
   }
 
-  def qSimIvf(s: SparkSession, sf: String): DataFrame =
-    ivfTopk(s, sf, IvfNprobe)
-
-  /** Full IVF pipeline with the probe fan-out threaded ([[qSimIvf]] binds
-    * the production [[IvfNprobe]]; `tools.IvfSweep` threads alternatives
-    * to measure the recall/wall frontier — candidates are exact-scored
-    * regardless, so nprobe only moves RECALL, never precision). */
-  private[graft] def ivfTopk(s: SparkSession, sf: String, nprobe: Int): DataFrame = {
+  def qSimIvf(s: SparkSession, sf: String): DataFrame = {
     import graft.functions.VectorExpressions.cosineSim
     // cached: the quantized frame feeds the centroid filter, the posting
     // assignment and the probe fan-out (harness-drained via Caches);
@@ -280,7 +273,7 @@ object VectorOps {
       q.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id", cents)
     val probeLists = ivfProbe(
       q.filter(Llm.probeFilter).withColumnRenamed("vec_id", "probe_id"),
-      "probe_id", cents, nprobe)
+      "probe_id", cents, IvfNprobe)
     // each neighbor sits in exactly one posting list, so (probe, neighbor)
     // pairs are already unique — no post-join distinct needed
     val candidates = probeLists.join(posting, Seq("cid"))
@@ -1166,18 +1159,18 @@ object VectorOps {
     * real corpora orders of magnitude under it). Per iteration: one tiny
     * (K×dims) centroid aggregate exchange; the lane frame is
     * pre-partitioned on vec_id and its shuffle is planner-REUSED across
-    * every round's consumers (exchange reuse — verified with
-    * tools.Shuffles: 5 rounds plan 2 corpus exchanges, not 10), so the
-    * E-step broadcast-join, the per-vector argmin, and the next round's
-    * centroid join all ride the same distribution. Five rounds chain
-    * LAZILY into one plan — at this depth Catalyst planning is cheap and
+    * every round's consumers (exchange reuse — locked with AQE off in
+    * PlanSpec's q_kmeans test: 5 rounds plan 2 corpus exchanges, not
+    * 10), so the E-step broadcast-join, the per-vector argmin, and the
+    * next round's centroid join all ride the same distribution. Five
+    * rounds chain LAZILY into one plan — at this depth Catalyst planning is cheap and
     * a per-round checkpoint job costs more than it saves (the opposite
     * trade from [[pagerank]]'s 40 rounds). Emits the converged
     * (vec_id, c, d2) assignment with its exact final distance. */
   def qKmeans(s: SparkSession, sf: String): DataFrame = {
     // deliberately UNCACHED: the loop below is lazy, so all 10 per-round
     // consumers share the lane frame through planner exchange reuse (2
-    // corpus exchanges for 5 rounds, verified with tools.Shuffles); an
+    // corpus exchanges for 5 rounds, locked in PlanSpec's q_kmeans test); an
     // InMemoryRelation here would hide the vec_id partitioning under AQE
     // (the q_churn_matrix trap) and hand every consumer its own re-shuffle
     // — measured 1.9x slower than the reused exchange

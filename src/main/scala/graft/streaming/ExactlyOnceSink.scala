@@ -167,30 +167,22 @@ object ExactlyOnceSink {
     placed
   }
 
-  /** foreachBatch handler writing each micro-batch to outDir/batch=N. */
+  /** foreachBatch handler writing each micro-batch to outDir/batch=N. A
+    * replay of an already-committed batch skips the write but still
+    * consumes `df`: a stateful query commits its state stores only when
+    * the batch's plan runs, and Spark rejects a batch whose stores never
+    * committed (STATE_STORE_COMMIT_VALIDATION_FAILED on the restart). */
   def parquetSink(outDir: String): (DataFrame, Long) => Unit = (df, batchId) => {
-    val spark = df.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
     val out = new Path(outDir)
-    val fs = out.getFileSystem(conf)
+    val fs = out.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     val lock = commitLocks.computeIfAbsent(s"$outDir#$batchId", _ => new Object)
     lock.synchronized {
-      val alreadyDone =
-        fs.exists(new Path(out, s"_COMMITTED_batch=$batchId")) &&
-          fs.exists(new Path(out, s"batch=$batchId"))
-      if (!alreadyDone)
-        commitAttempt(fs, out, batchId)(staging =>
-          df.write.mode("overwrite").parquet(staging.toString))
-      else {
-        val stale = fs.globStatus(new Path(out, s"_staging_batch=$batchId-*"))
-        if (stale != null) stale.foreach(st => fs.delete(st.getPath, true))
-        // same nested-leftover sweep as commitAttempt's sweepStagings: a
-        // replay that finds the batch already committed is exactly the
-        // "next attempt" that must converge a crashed loser's nested copy
-        val nested = fs.globStatus(
-          new Path(out, s"batch=$batchId/_staging_batch=$batchId-*"))
-        if (nested != null) nested.foreach(st => fs.delete(st.getPath, true))
+      var wrote = false
+      commitAttempt(fs, out, batchId) { staging =>
+        wrote = true
+        df.write.mode("overwrite").parquet(staging.toString)
       }
+      if (!wrote) graft.Bench.materialize(df)
     }
   }
 }

@@ -55,7 +55,7 @@ class ExtraOpsSpec extends SparkSuite {
     Caches.drain(spark)
     info(f"recall@5 sf0.1: lsh=$lsh01%.3f ivf=$ivf01%.3f")
     // floors pinned just under the measured levels (PERF.md: lsh 0.20;
-    // ivf 0.755 at the round-17 nprobe=16 fan-out — the IvfSweep
+    // ivf 0.755 at the round-17 nprobe=16 fan-out — the measured
     // frontier lifted it from 0.455 at nprobe=4) so a recall collapse
     // fails loudly while hash-seed-level jitter does not. The absolute
     // level is a FIXTURE property — this corpus's true neighbors sit at

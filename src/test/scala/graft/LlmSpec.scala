@@ -33,11 +33,11 @@ class LlmSpec extends SparkSuite {
   }
 
   test("near-dup band layouts: every swept layout keeps exact-duplicate recall 1.0") {
-    // the round-15 frontier sweep (tools.NearSweep) threads nBands through
-    // nearDupPairs; whatever the layout, an exact duplicate shares EVERY
-    // minhash, so it collides in every band of any layout — the recall
-    // floor the knob must never be able to break (only boundary-J recall
-    // is layout-dependent, quantified in PERF.md)
+    // nearDupPairs takes the band layout as a parameter; whatever the
+    // layout, an exact duplicate shares EVERY minhash, so it collides in
+    // every band of any layout — the recall floor the knob must never be
+    // able to break (only boundary-J recall is layout-dependent, quantified
+    // in PERF.md's round-15 frontier)
     val base = "the fast key order sort table scan merge batch value spark " * 5
     val docs = Seq(Doc(1L, base), Doc(2L, base),
       Doc(4L, "completely different words about nothing at all here now")).toDF()
@@ -179,10 +179,43 @@ class LlmSpec extends SparkSuite {
     val docs = Tables.documents(spark, sf001).select("doc_id", "text")
       .unionAll(Seq(Doc(90001L, "ab𝄞cd𝄞ef gh"), Doc(90002L, "tiny")).toDF())
     val fused = Llm.sigOf(docs)
-    val agg = Llm.sigFromShingles(Llm.sigShingles(docs))
+    val agg = sigViaAggregate(docs)
     assert(fused.count() == agg.count())
     assert(fused.exceptAll(agg).isEmpty && agg.exceptAll(fused).isEmpty,
       "fused signature kernel must be bit-identical to the aggregate route")
+  }
+
+  /** The 32-way min-aggregate signature route the oracle replays: explode
+    * the (non-distinct) shingle ids, then min-aggregate every affine image
+    * mod P per doc. A doc shorter than 5 chars has no shingle, so no row. */
+  private def sigViaAggregate(docs: org.apache.spark.sql.DataFrame) = {
+    import graft.functions.MinHash.{MersennePrime => P, NumHashes, hashA, hashB}
+    import graft.functions.TextExpressions.shingleHashes
+    val hashed = docs.filter(length(col("text")) >= 5)
+      .select(col("doc_id"), explode(shingleHashes(col("text"), 5)).as("sh"))
+      .withColumn("h", pmod(col("sh"), lit(P)))
+    val aggs = (0 until NumHashes).map { i =>
+      min(pmod(col("h") * lit(hashA(i)) + lit(hashB(i)), lit(P))).as(s"m$i")
+    }
+    hashed.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+  }
+
+  test("minhash kernel: ids outside [0, P) take the legacy % branch") {
+    // rollhash shingle ids are always < 1e9+7 < P, so the aggregate lock
+    // above never reaches this branch: pin that ids >= P (where the
+    // hot path's s·a + b would overflow) and negative ids (Java %, so a
+    // negative residue, unlike the aggregate route's pmod) follow the `%`
+    // formula, alone and mixed with an in-range id
+    import graft.functions.MinHash.{MersennePrime => P, NumHashes, hashA, hashB, signature}
+    def viaMod(ids: Seq[Long]) = (0 until NumHashes).map { j =>
+      ids.map(s => ((s % P) * hashA(j) + hashB(j)) % P).min
+    }
+    val outside = Seq(P, P + 7, 3 * P + 11, 1L << 40, Long.MaxValue, -1L, -P - 3, Long.MinValue)
+    (outside.map(Seq(_)) :+ (outside :+ 12345L)).foreach { ids =>
+      val got = signature(
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(ids.toArray)).toSeq
+      assert(got == viaMod(ids), s"ids $ids: kernel left the % formula")
+    }
   }
 
   test("approx_count_distinct within 5% of exact") {

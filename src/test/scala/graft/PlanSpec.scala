@@ -238,6 +238,27 @@ class PlanSpec extends SparkSuite {
       "q_dedup_near: exact verify regressed from the per-doc array_intersect shape")
     assert(near.contains("array_distinct"),
       "q_dedup_near: candidate shingle sets must be per-doc distinct arrays, not a re-exploded stream")
+    // negative side: any exploded (doc, shingle) stream is a Generate over
+    // the shingle kernel. The analyzed plan still holds the subtrees that
+    // Caches.registered later swaps for in-memory scans, so a stream
+    // hidden behind a cache cannot slip past
+    val exploded = SparkEntry.queries("q_dedup_near")(spark, sf001).queryExecution.analyzed
+      .collect { case g: org.apache.spark.sql.catalyst.plans.logical.Generate
+        if g.generator.find(_.isInstanceOf[graft.functions.ShingleHashes]).isDefined => g }
+    assert(exploded.isEmpty,
+      s"q_dedup_near: the exploded shingle stream is back:\n${exploded.mkString("\n")}")
+  }
+
+  test("the must-push queries carry a pushed filter into at least one parquet scan") {
+    // each of these filters a scanned table; a type change on a filtered
+    // column (a driver data-generation flip) can silently turn a
+    // scan-level filter into a post-scan one
+    Seq("q_sql_q3", "q_sql_q5", "q_sql_q7", "q_sql_q10", "q_sql_q14",
+      "q_sql_q18", "q_filter_range").foreach { n =>
+      val pushed = "PushedFilters: \\[[^\\]]*\\]".r.findAllIn(plan(n)).toSeq
+      assert(pushed.exists(_ != "PushedFilters: []"),
+        s"$n: no pushed filter reached any scan: $pushed")
+    }
   }
 
   test("no query plans a CartesianProduct except the declared cross join") {

@@ -192,6 +192,66 @@ class StreamingSpec extends SparkSuite {
     }
   }
 
+  test("exactly-once sink: a crash after the sink commits replays through the skip path (RocksDB)") {
+    // The crash lands after parquetSink has committed batch 1 and before
+    // the engine logs it, so the restart replays batch 1 against its
+    // committed output. The sink skips the write but must still run the
+    // batch, or the stateful aggregation never commits its state stores
+    // and Spark fails the restart (STATE_STORE_COMMIT_VALIDATION_FAILED).
+    implicit val sqlCtx = spark.sqlContext
+    val outDir = Files.createTempDirectory("eo_post_out").toString
+    val cpDir = Files.createTempDirectory("eo_post_cp").toString
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      val events = Tables.events(spark, sf001).select("ts", "event_type", "value").as[Ev].collect()
+      val chunks = events.grouped((events.length + 2) / 3).toSeq
+      val mem = MemoryStream[Ev]
+      val sink = ExactlyOnceSink.parquetSink(outDir)
+      val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
+      def start() = Pipeline.tumblingCounts(mem.toDF())
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", cpDir)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
+          sink(df, batchId)
+          if (batchId == 1 && !crashed.getAndSet(true))
+            throw new RuntimeException("injected crash after the sink committed")
+        }
+        .start()
+
+      val q1 = start()
+      mem.addData(chunks(0): _*)
+      q1.processAllAvailable()
+      mem.addData(chunks(1): _*)
+      intercept[Exception] { q1.processAllAvailable(); q1.awaitTermination() }
+      q1.stop()
+      assert(crashed.get, "the injected crash must actually fire")
+      assert(new java.io.File(outDir, "batch=1").isDirectory,
+        "batch 1 must be committed before the crash")
+
+      val q2 = start() // restart from the same checkpoint: replays batch 1
+      try {
+        mem.addData(chunks(2): _*)
+        q2.processAllAvailable()
+      } finally q2.stop()
+
+      val ids = new java.io.File(outDir).listFiles.map(_.getName)
+        .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong).sorted.toSeq
+      assert(ids == Seq(0L, 1L, 2L), s"every batch must be published exactly once: $ids")
+      // update mode: the row a window emitted last holds its final value
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("win_start", "event_type").orderBy(col("batch").desc)
+      val last = spark.read.option("basePath", outDir).parquet(s"$outDir/batch=*")
+        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+        .select("win_start", "win_end", "event_type", "cnt", "sum_value")
+        .orderBy("win_start", "event_type").collect().toSeq
+      val twin = queries.StreamTwins.qStreamTumbling(spark, sf001).collect().toSeq
+      assert(last == twin, "the last row per window must equal the batch twin")
+    } finally {
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
+  }
+
   test("exactly-once sink: two attempts racing one batch id commit exactly one complete output") {
     // the speculative/duplicate-task case: a zombie driver or re-executed
     // task runs the same (df, batchId) concurrently with the live one. The
